@@ -5,10 +5,10 @@ hex-encoded ids, nanos->ms arithmetic, default service name) for the tokenized
 input of FIXTURES.md §1.
 
 * ``parse_spans_jvm`` — pure whole-stage-codegen expressions (slot math,
-  hex/lpad, char() payload decode). The pipeline DEFAULT since round 4:
-  with it the flagship DAG has ZERO Python stages. Measured ~5x faster
-  than the Arrow kernel on bench0.1 (1.26s vs 6.30s full decode of 3.08M
-  spans) because the corpus never crosses the JVM<->Python socket — the
+  hex/lpad, char() payload decode). The production decode of every
+  pipeline: with it the flagship DAG has ZERO Python stages. Measured ~5x
+  faster than the Arrow kernel on bench0.1 (1.26s vs 6.30s full decode of
+  3.08M spans) because the corpus never crosses the JVM<->Python socket — the
   socket crossing, not the numpy math, was the Arrow stage's cost.
 * ``parse_spans`` — the Arrow-vectorized numpy kernel via
   ``DataFrame.mapInArrow``: every field extracted with gather/slice math
@@ -297,24 +297,6 @@ def parse_ok_expr(tokens: Column) -> Column:
     )
 
 
-def trace_id_expr(tokens: Column) -> Column:
-    """JVM-side trace_id extraction (hex of words 0-3) — the routing-side
-    fast path: the wide token column never crosses the Arrow boundary just to
-    recover its join key. Whole-stage-codegen'd; null for malformed rows."""
-    tid = F.concat(*[_hex_word(tokens, i) for i in range(1, 5)])
-    return F.when(parse_ok_expr(tokens), tid)
-
-
-def trace_key_exprs(tokens: Column) -> tuple[Column, Column]:
-    """JVM-side 128-bit trace key as two int64 — pure integer ops, no string
-    allocation per span (the hot-path join key)."""
-    ok = parse_ok_expr(tokens)
-    return (
-        F.when(ok, _i64_word(tokens, 0)),
-        F.when(ok, _i64_word(tokens, 2)),
-    )
-
-
 def day_expr(tokens: Column) -> Column:
     """JVM-side UTC day from the timestamp header slots (8,9) — the
     reference's ``day(timestamp_ms)`` Iceberg partition dimension
@@ -355,10 +337,11 @@ def name_csv_exprs(tokens: Column) -> tuple[Column, Column]:
 
 def csv_name_expr(c: Column) -> Column:
     """Inverse of :func:`name_csv_exprs`: code-point CSV -> string.
-    Empty CSV decodes to "" (split yields [""], char(NULL) drops in
-    array_join)."""
+    Empty CSV decodes to "": split yields [""], try_cast turns "" into
+    NULL (a plain cast raises CAST_INVALID_INPUT under ANSI mode), and
+    array_join drops the NULL char."""
     return F.array_join(
-        F.transform(F.split(c, ","), lambda x: F.char(x.cast("int"))), ""
+        F.transform(F.split(c, ","), lambda x: F.char(x.try_cast("int"))), ""
     )
 
 
@@ -371,23 +354,13 @@ def with_routing_key(tokenized: DataFrame) -> DataFrame:
     route_spans overrides their decision to 'malformed' after the join — and
     leaving them ungated means the validity predicate, whose payload scan is
     the expensive part, is evaluated once per row instead of three times
-    (measured 1.75x on the routing stage; see trace_key_exprs for the gated
-    variant used where nulled keys matter)."""
+    (measured 1.75x on the routing stage; parse_spans_jvm yields the gated
+    keys where nulled keys matter)."""
     return tokenized.withColumns(
         {
             "trace_k1": _i64_word(F.col("tokens"), 0),
             "trace_k2": _i64_word(F.col("tokens"), 2),
             "parse_ok": parse_ok_expr(F.col("tokens")),
-        }
-    )
-
-
-def spans_with_flags(parsed: DataFrame) -> DataFrame:
-    """Cheap derived predicates used throughout (P2/P3 of SURVEY.md §2.2)."""
-    return parsed.withColumns(
-        {
-            "is_error": F.col("status_code") == F.lit(2),
-            "is_root": F.col("parent_span_id").isNull(),
         }
     )
 
@@ -404,11 +377,9 @@ def parse_spans_jvm(
     Built from the same whole-stage-codegen expression family the routing
     side already uses (_i64_word/_hex_word/parse_ok_expr); the string
     payloads decode with char() over a token slice, which is the only
-    interpreted part (higher-order functions run outside codegen). Use
-    whichever side of that trade measures faster on the deployment: the
-    Arrow kernel pays the corpus crossing the JVM<->Python socket, this
-    variant pays interpreted per-character decode. Measured on this box
-    (bench0.1, 3.08M spans, min-of-3): see ROADMAP round-5 notes.
+    interpreted part (higher-order functions run outside codegen). That
+    interpreted decode still measured ~5x faster than the Arrow kernel,
+    which pays the corpus crossing the JVM<->Python socket.
     """
     t = F.col("tokens")
     ok = parse_ok_expr(t)

@@ -92,13 +92,6 @@ def route_spans(spans: DataFrame, decided: DataFrame) -> DataFrame:
     return out.withColumns(override)
 
 
-def route_spans_semi(spans: DataFrame, decided: DataFrame, sink: str) -> DataFrame:
-    """Left-semi variant (J1): only the rows for one sink, no added columns —
-    what you use when only the keep stream is exported (evaluator.rs:244)."""
-    ids = decided.filter(F.col("decision") == sink).select("trace_id")
-    return spans.join(ids, "trace_id", "semi")
-
-
 def decision_metrics(decided: DataFrame) -> DataFrame:
     """Per-(policy, decision) trace counts — tail_sampling_traces_* parity."""
     return (
@@ -106,13 +99,6 @@ def decision_metrics(decided: DataFrame) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("trace_count"))
         .withColumnRenamed("decision", "sink")
     )
-
-
-def sink_row_metrics(routed: DataFrame) -> DataFrame:
-    """Per-sink routed span-row counts (the routed-row count parity metric)."""
-    return routed.groupBy("decision").agg(
-        F.count(F.lit(1)).alias("row_count")
-    ).withColumnRenamed("decision", "sink")
 
 
 def write_routed(

@@ -15,8 +15,15 @@ idempotent primitives:
   overwrite -> re-writing a bucket is idempotent;
 * the manifest (parquet under ``_checkpoint/``) gains one row per completed
   bucket AFTER its sink data is committed; a resumed run reads the manifest
-  and filters completed buckets out right after the parse stage, so their
-  assembly/join cost is never paid again.
+  and filters completed buckets out right after the scan, so their
+  parse/assembly/join cost is never paid again;
+* ``_checkpoint/_SPEC.json`` pins ``n_buckets`` (the parquet reader skips
+  ``_``-prefixed names): a resume with another count raises instead of
+  re-processing traces committed under other bucket numbers.
+
+The job itself is ``plans.pipeline.run_pipeline`` on the bucket-filtered
+input; this module only adds the bucket column, the commit and the
+manifest.
 
 Crash window: between sink commit and manifest append a bucket may be
 rewritten on resume — harmless by idempotence (exactly the Iceberg
@@ -29,14 +36,13 @@ import os
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from otel_tail_sampler_spark.operators.assembly import assemble_traces
-from otel_tail_sampler_spark.operators.parser import parse_spans
-from otel_tail_sampler_spark.operators.policies import SamplerConfig, decide
-from otel_tail_sampler_spark.operators.routing import route_spans
-from otel_tail_sampler_spark.plans.pipeline import read_tokenized
+from otel_tail_sampler_spark.operators.parser import parse_spans_jvm
+from otel_tail_sampler_spark.operators.policies import SamplerConfig
+from otel_tail_sampler_spark.plans.corpus_prep import _read_marker, _write_marker
+from otel_tail_sampler_spark.plans.pipeline import read_tokenized, run_pipeline
 
 MANIFEST_SCHEMA = "bucket int, status string, rows long, committed_at_ms long"
 
@@ -83,32 +89,34 @@ def run_resumable(
     cfg = cfg or SamplerConfig()
     ckpt_dir = os.path.join(out_dir, "_checkpoint")
     routed_dir = os.path.join(out_dir, "routed")
+    # the bucket count is part of the checkpoint: resuming with another
+    # count would re-process traces already committed under other bucket
+    # numbers. Checkpoints written before the marker existed resume as-is.
+    spec_path = os.path.join(ckpt_dir, "_SPEC.json")
+    spec = _read_marker(spark, spec_path)
+    if spec is not None and spec.get("n_buckets") != n_buckets:
+        raise ValueError(
+            f"checkpoint at {ckpt_dir} was written with "
+            f"n_buckets={spec.get('n_buckets')}; cannot resume with "
+            f"n_buckets={n_buckets}"
+        )
     done = read_manifest(spark, ckpt_dir)
     remaining = [b for b in range(n_buckets) if b not in done]
     if not remaining:
         return ResumableResult([], sorted(done), {})
+    if spec is None:
+        _write_marker(spark, spec_path, {"n_buckets": n_buckets})
 
-    spans = parse_spans(read_tokenized(spark, input_path)).withColumn(
-        "bucket", bucket_col(n_buckets)
+    # bucket_col needs the GATED keys (null on malformed rows, which then
+    # bucket by doc_id); parse_spans_jvm yields the same keys as the Arrow
+    # parser, so bucket numbers of existing checkpoints still hold
+    tokenized = read_tokenized(spark, input_path)
+    tokenized = parse_spans_jvm(tokenized, fields=["trace_k1", "trace_k2"]).select(
+        *tokenized.columns, bucket_col(n_buckets).alias("bucket")
     )
     if done:  # prune completed buckets BEFORE any shuffle
-        spans = spans.filter(~F.col("bucket").isin([int(b) for b in done]))
-
-    good = spans.filter(F.col("parse_ok")).drop("tokens", "n_tok")
-    traces = assemble_traces(good.drop("bucket"))
-    if force_rules:
-        from otel_tail_sampler_spark.operators.force_rules import apply_force_rules
-
-        traces = apply_force_rules(traces, good, force_rules)
-    decided = decide(traces, cfg)
-    # persist ONLY the slim decision projection (mirrors pipeline.py): the
-    # route join build side and the trace count reuse it without recomputing
-    # parse + assembly
-    slim_cols = ["trace_id", "decision", "decision_policy"]
-    if "trace_k1" in decided.columns:
-        slim_cols = ["trace_k1", "trace_k2"] + slim_cols
-    decisions = decided.select(*slim_cols).persist()
-    routed = route_spans(spans, decisions)
+        tokenized = tokenized.filter(~F.col("bucket").isin([int(b) for b in done]))
+    res = run_pipeline(spark, tokenized, cfg, force_rules=force_rules)
 
     # idempotent sink commit FIRST — the single full pass over the data.
     # Dynamic partition overwrite is the correctness contract here: with
@@ -123,11 +131,13 @@ def run_resumable(
     spark.conf.set(ow_key, "dynamic")
     try:
         (
-            routed.write.mode("overwrite")
+            res.routed.write.mode("overwrite")
             .partitionBy("bucket", "decision")
             .parquet(routed_dir)
         )
+        n_traces = res.decisions.count()  # persisted slim: no recompute
     finally:
+        res.decisions.unpersist()
         if prev_ow is not None:
             spark.conf.set(ow_key, prev_ow)
         else:
@@ -152,8 +162,7 @@ def run_resumable(
         )
         per_bucket[r["bucket"]] = per_bucket.get(r["bucket"], 0) + r["rows"]
     stage_metrics["input_rows"] = sum(per_bucket.values())
-    stage_metrics["traces"] = decisions.count()
-    decisions.unpersist()
+    stage_metrics["traces"] = n_traces
 
     # manifest append AFTER data commit
     now_ms = int(time.time() * 1000)

@@ -22,16 +22,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from otel_tail_sampler_spark.operators.assembly import assemble_traces
-from otel_tail_sampler_spark.operators.parser import (
-    parse_spans,
-    parse_spans_jvm,
-    with_routing_key,
-)
+from otel_tail_sampler_spark.operators.parser import parse_spans_jvm, with_routing_key
 from otel_tail_sampler_spark.operators.policies import SamplerConfig, decide
 from otel_tail_sampler_spark.operators.routing import (
     decision_metrics,
     route_spans,
-    sink_row_metrics,
     write_routed,
 )
 
@@ -73,13 +68,13 @@ def run_pipeline(
     cfg: SamplerConfig | None = None,
     force_rules: list[dict] | None = None,
     salt_buckets: int | None = None,
-    parser: str = "jvm",
 ) -> PipelineResult:
-    """``parser`` selects the decode stage: ``"jvm"`` (default) runs the
-    whole-stage-codegen expression parser — the flagship DAG then has ZERO
-    Python stages — while ``"arrow"`` keeps the vectorized numpy kernel
-    (the two are equality-tested; measured on bench0.1 the JVM decode is
-    ~5x faster because the corpus never crosses the JVM<->Python socket)."""
+    """The flagship DAG. ``input_path`` is a path or an already-read
+    tokenized DataFrame; extra input columns (e.g. the checkpoint run's
+    ``bucket``) pass through to ``routed``. The decode is the
+    whole-stage-codegen expression parser, so the DAG has ZERO Python
+    stages (measured ~5x faster on bench0.1 than the Arrow kernel, whose
+    corpus crosses the JVM<->Python socket)."""
     cfg = cfg or SamplerConfig()
     tokenized = (
         input_path
@@ -92,13 +87,8 @@ def run_pipeline(
     #    into nothing (dropped inside the parse projection)
     #  * routing side: trace keys only, tokens pass through untouched
     # This is the metadata-first split — the wide payload only ever moves
-    # through the broadcast-joined route stage. With parser="arrow" the
-    # pruning is explicit (mapInArrow is opaque to Catalyst); the JVM
-    # parser is ordinary expressions Catalyst prunes itself.
-    if parser == "arrow":
-        full = parse_spans(tokenized.select("tokens"), keep_tokens=False)
-    else:
-        full = parse_spans_jvm(tokenized.select("tokens"), keep_tokens=False)
+    # through the broadcast-joined route stage.
+    full = parse_spans_jvm(tokenized.select("tokens"), keep_tokens=False)
     spans = with_routing_key(tokenized)  # pure JVM: no Arrow roundtrip
 
     # malformed rows (parse_ok=false) never reach assembly; they route to the
@@ -151,37 +141,44 @@ def run_and_write(
 
     t0 = time.time()
     res = run_pipeline(spark, input_path, cfg, **kw)
-    obs = Observation()
-    routed_obs = res.routed.observe(
-        obs,
-        F.count(F.lit(1)).alias("routed_rows"),
-        *[
-            F.sum((F.col("decision") == s).cast("long")).alias(f"{s}_rows")
-            for s in SINK_NAMES
-        ],
-    )
-    write_routed(routed_obs, os.path.join(out_dir, "routed"), day_partition=day_partition)
-    counts = obs.get  # available after the write action
+    dm_dir = os.path.join(out_dir, "metrics_decisions")
+    try:
+        obs = Observation()
+        routed_obs = res.routed.observe(
+            obs,
+            F.count(F.lit(1)).alias("routed_rows"),
+            *[
+                F.sum((F.col("decision") == s).cast("long")).alias(f"{s}_rows")
+                for s in SINK_NAMES
+            ],
+        )
+        write_routed(routed_obs, os.path.join(out_dir, "routed"), day_partition=day_partition)
+        counts = obs.get  # available after the write action
 
-    dm = decision_metrics(res.decisions)
-    dm.coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "metrics_decisions"))
+        decision_metrics(res.decisions).coalesce(1).write.mode("overwrite").parquet(dm_dir)
+        # exported manifest (J2 dedup source on re-runs; replaces Redis
+        # exported:{trace_id} keys, evaluator.rs:358-401)
+        (
+            res.decisions.filter(F.col("decision") == "keep")
+            .select("trace_id")
+            .write.mode("overwrite")
+            .parquet(os.path.join(out_dir, "exported"))
+        )
+        n_traces = int(res.decisions.count())  # persisted slim: no recompute
+    finally:
+        res.decisions.unpersist()
+    # read back what was written: the caller's collect of the returned frame
+    # must not re-run parse + assembly on the now-unpersisted decisions
+    dm = spark.read.parquet(dm_dir)
     rm = spark.createDataFrame(
         [(s, int(counts[f"{s}_rows"] or 0)) for s in SINK_NAMES
          if (counts[f"{s}_rows"] or 0) > 0],
         "sink string, row_count long",
     )
     rm.coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "metrics_rows"))
-    # exported manifest (J2 dedup source on re-runs; replaces Redis
-    # exported:{trace_id} keys, evaluator.rs:358-401)
-    (
-        res.decisions.filter(F.col("decision") == "keep")
-        .select("trace_id")
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_dir, "exported"))
-    )
     run_rows = [
         ("input_rows", int(counts["routed_rows"] or 0)),
-        ("traces", int(res.decisions.count())),  # persisted slim: no recompute
+        ("traces", n_traces),
         *[(f"routed_{s}", int(counts[f"{s}_rows"] or 0)) for s in SINK_NAMES],
         ("wall_ms", int((time.time() - t0) * 1000)),
         ("finished_at_ms", int(time.time() * 1000)),

@@ -49,8 +49,8 @@ def main() -> None:
     section(
         "Flagship pipeline: routed output",
         "What to check: ZERO Python stages anywhere (round 4: the decode\n"
-        "is whole-stage-codegen expressions; the Arrow kernel remains as\n"
-        "the equality-tested parser='arrow' variant); the decision build\n"
+        "is whole-stage-codegen expressions; the Arrow kernel remains\n"
+        "only as the tests' equality reference); the decision build\n"
         "side is BroadcastHashJoin (only non-drop decisions broadcast —\n"
         "O(kept)); assembly is a two-phase HashAggregate (partial ->\n"
         "final) on the int64 key pair.",

@@ -307,14 +307,28 @@ def test_orc_source_matches_parquet(spark, small_dataset, tmp_path):
     assert b.spans.schema["tokens"].dataType.simpleString() == "array<int>"
 
 
-def test_jvm_parser_pipeline_matches_arrow(spark, small_dataset):
-    """The default (JVM-expression) parser and the Arrow kernel drive the
-    pipeline to IDENTICAL decisions and routed counts."""
-    a = run_pipeline(spark, small_dataset["tokenized"], CFG, parser="arrow")
-    b = run_pipeline(spark, small_dataset["tokenized"], CFG, parser="jvm")
-    da = {(r["trace_id"], r["decision"]) for r in a.decided.collect()}
-    db = {(r["trace_id"], r["decision"]) for r in b.decided.collect()}
-    assert da == db
-    ca = {r["decision"]: r["count"] for r in a.routed.groupBy("decision").count().collect()}
-    cb = {r["decision"]: r["count"] for r in b.routed.groupBy("decision").count().collect()}
-    assert ca == cb
+def test_run_and_write_releases_its_cache(spark, small_dataset, tmp_path):
+    """run_and_write unpersists the slim decision table it caches, and the
+    frames it returns collect to what it wrote without re-running the
+    pipeline (decision metrics are read back from their parquet)."""
+    from otel_tail_sampler_spark.plans.pipeline import run_and_write
+
+    def n_persistent():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = n_persistent()
+    out = str(tmp_path / "out")
+    m = run_and_write(spark, small_dataset["tokenized"], out, CFG)
+    assert n_persistent() == before
+
+    plan = m["decision_metrics"]._jdf.queryExecution().executedPlan().toString()
+    assert "HashAggregate" not in plan and "InMemoryTableScan" not in plan
+    for key, sub in (
+        ("decision_metrics", "metrics_decisions"),
+        ("row_metrics", "metrics_rows"),
+        ("run_metrics", "metrics_run"),
+    ):
+        written = spark.read.parquet(f"{out}/{sub}")
+        got = m[key]
+        assert sorted(got.collect()) == sorted(written.collect()), key
+    assert sum(r["trace_count"] for r in m["decision_metrics"].collect()) > 0

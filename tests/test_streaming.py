@@ -202,6 +202,54 @@ def test_streaming_routed_keep_export(spark, tmp_path_factory):
     )
 
 
+def test_stream_decodes_empty_service_name(spark, tmp_path):
+    """A span with a zero-length service name is valid input (parse_ok
+    admits it); the deferred CSV name decode must emit "" for it instead of
+    failing the query with CAST_INVALID_INPUT under ANSI mode."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from otel_tail_sampler_spark.sources.generator import (
+        HDR,
+        _hex_upper,
+        build_token_arrays,
+        generate_fields,
+    )
+
+    f = generate_fields(GenSpec(n_traces=60, spans_per_trace=3, seed=5))
+    rows = build_token_arrays(f).to_pylist()
+    # row 0 is the root (earliest span) of trace 0: its service name is the
+    # trace's service_name, and trace 0's session closes first
+    r = rows[0]
+    rows[0] = r[:HDR] + [0] + r[HDR + 1 + r[HDR]:]
+    src = tmp_path / "tokenized"
+    src.mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": [f"d{i}" for i in range(len(rows))],
+                "tokens": pa.array(rows, pa.list_(pa.int32())),
+                "n_tok": pa.array([len(t) for t in rows], pa.int32()),
+                "source": ["s"] * len(rows),
+            }
+        ),
+        str(src / "part-0000.parquet"),
+    )
+    out_dir = str(tmp_path / "out")
+    run_streaming_pipeline(
+        spark,
+        str(src),
+        out_dir,
+        CFG,
+        gap_seconds=GAP_S,
+        watermark_delay=f"{DELAY_S} seconds",
+    )
+    emitted = pd.read_parquet(os.path.join(out_dir, "decided")).set_index("trace_id")
+    trace0 = _hex_upper(f["trace_words"][:1])[0]
+    assert emitted.loc[trace0, "service_name"] == ""
+    assert (emitted.drop(index=trace0)["service_name"] != "").all()
+
+
 def test_dedup_stream_first_wins_across_batches(spark, tmp_path_factory):
     """Streaming exact-dedup: first arrival of a digest passes, later
     arrivals (across micro-batches) drop; same-batch ties elect min id."""
